@@ -6,6 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from vector_search_service_spark import storage
+
 
 @pytest.fixture()
 def catalog(spark, tmp_path):
@@ -576,9 +578,8 @@ def test_postings_crash_mid_compact_leaves_complete_snapshot(
     # crash point (a): mid-snapshot-write — simulate by a partial
     # next-version dir (garbage file); the pointer never flipped, so
     # readers resolve the old, complete snapshot
-    cur = cat.postings._current_version(coll_id)
-    nxt = cat.postings._next_version(cur)
-    partial = os.path.join(cat.postings._coll_dir(coll_id), nxt)
+    versions = cat.postings._versions(coll_id)
+    partial = versions.path(versions.live() + 1)
     os.makedirs(partial, exist_ok=True)
     with open(os.path.join(partial, "part-00000-torn.parquet"), "wb") as f:
         f.write(b"\x00not parquet")
@@ -590,7 +591,7 @@ def test_postings_crash_mid_compact_leaves_complete_snapshot(
     def boom(*a, **k):
         raise RuntimeError("simulated crash before pointer flip")
 
-    monkeypatch.setattr(cat.postings, "_flip", boom)
+    monkeypatch.setattr(storage.Versions, "publish", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         cat.compact_index("kb")
     monkeypatch.undo()
@@ -603,7 +604,7 @@ def test_postings_crash_mid_compact_leaves_complete_snapshot(
     # crash point (c): flip done, crash BEFORE prune — the NEW
     # snapshot is live and complete; superseded dirs are garbage, not
     # corruption (the next mutation prunes them)
-    monkeypatch.setattr(cat.postings, "_prune", boom)
+    monkeypatch.setattr(storage.Versions, "prune", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         cat.compact_index("kb")
     monkeypatch.undo()
@@ -633,7 +634,7 @@ def test_postings_crash_mid_rewrite_keeps_old_index_live(
     def boom(*a, **k):
         raise RuntimeError("simulated crash before pointer flip")
 
-    monkeypatch.setattr(cat.postings, "_flip", boom)
+    monkeypatch.setattr(storage.Versions, "publish", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         cat.delete_documents("kb", ["d0", "d1", "d2"])
     monkeypatch.undo()

@@ -256,6 +256,7 @@ def test_index_manifest_validates_buckets_and_hash(spark, tmp_path):
     default-expecting reader)."""
     import json
     import os
+    import warnings
 
     import pytest
 
@@ -280,22 +281,32 @@ def test_index_manifest_validates_buckets_and_hash(spark, tmp_path):
     lists = read_posting_lists(spark, path, ["hash"])
     assert lists.count() > 0
 
-    # caller passes the WRONG modulus: loud, not empty
-    with pytest.raises(ValueError, match="n_buckets"):
-        read_posting_lists(spark, path, ["hash"], n_buckets=64)
+    # caller passes the WRONG modulus: loud, not empty — also when the
+    # query has no terms (validation runs before the early return)
+    for terms in (["hash"], []):
+        with pytest.raises(ValueError, match="n_buckets"):
+            read_posting_lists(spark, path, terms, n_buckets=64)
 
     # diverged hash sentinel: loud, not wrong buckets
     manifest["sentinel_hash"] += 1
     with open(mpath, "w") as f:
         json.dump(manifest, f)
-    with pytest.raises(ValueError, match="xxhash64_py diverges"):
-        read_posting_lists(spark, path, ["hash"])
+    for terms in (["hash"], []):
+        with pytest.raises(ValueError, match="xxhash64_py diverges"):
+            read_posting_lists(spark, path, terms)
 
     # pre-manifest index (legacy layout): caller/default pairing still
     # works — no manifest, no validation, same behavior as r12
     os.remove(mpath)
-    assert read_posting_lists(
-        spark, path, ["hash"], n_buckets=32).count() == lists.count()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert read_posting_lists(
+            spark, path, ["hash"], n_buckets=32).count() == lists.count()
+    # ...but with no manifest AND no caller n_buckets the default is a
+    # guess: warn instead of pruning silently
+    for terms in (["hash"], []):
+        with pytest.warns(UserWarning, match="no _index_manifest.json"):
+            read_posting_lists(spark, path, terms)
 
 
 def test_chunk_and_shingle_udfs_evaluate_once(spark):

@@ -21,19 +21,22 @@ explicitly:
 
 Timestamps (`G7`): Spark has no triggers — ``created_at``/``updated_at``
 are set by this writer.
+Catalog files outside the parquet tables (version pointer and commit
+protocol, stats rows, lock file) go through ``storage.py``.
 """
 
 from __future__ import annotations
 
 import contextlib
-import json
+import datetime
 import os
-import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import storage
 
 COLLECTION_SCHEMA = T.StructType([
     T.StructField("id", T.LongType(), False),
@@ -74,7 +77,8 @@ class Catalog:
         self.collections_path = os.path.join(root, "collections")
         self.documents_path = os.path.join(root, "documents")
         self.stats_path = os.path.join(root, "stats")
-        self._pointer_path = os.path.join(root, "collections.current")
+        self._versions = storage.Versions(
+            root, prefix="collections_v", pointer="collections.current")
         # in-process mutation serialization: the service's async batch
         # jobs share one Catalog across threads (ADVICE r1) — re-entrant
         # so create_collection can call _rewrite_collections under it
@@ -89,23 +93,12 @@ class Catalog:
 
     # -- collections (S1, S2, S8) -----------------------------------------
 
-    def _current_collections_dir(self) -> str:
-        """Resolve the live catalog version via the pointer file; fall
-        back to the legacy unversioned layout."""
-        if os.path.exists(self._pointer_path):
-            with open(self._pointer_path) as f:
-                return os.path.join(self.root, f.read().strip())
-        return self.collections_path
-
-    def _collections_exists(self) -> bool:
-        return os.path.exists(os.path.join(self._current_collections_dir(), "_SUCCESS"))
-
     def collections(self) -> DataFrame:
-        if not self._collections_exists():
+        # no pointer yet: the legacy unversioned layout
+        live = self._versions.live_path() or self.collections_path
+        if not storage.exists(os.path.join(live, "_SUCCESS")):
             return self.spark.createDataFrame([], COLLECTION_SCHEMA)
-        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(
-            self._current_collections_dir()
-        )
+        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(live)
 
     def get_collection(self, name: str) -> dict | None:
         rows = self.collections().filter(F.col("name") == name).limit(1).collect()
@@ -134,7 +127,7 @@ class Catalog:
             ).withColumn("created_at", F.current_timestamp()) \
              .withColumn("updated_at", F.current_timestamp())
             self._rewrite_collections(cur.unionByName(row_df))
-            self._set_stats(next_id, 0)  # stats maintained from birth
+            self._store_stats(next_id, 0)  # stats maintained from birth
             return self.get_collection(name)  # re-read: timestamps materialized
 
     def delete_collection(self, name: str) -> bool:
@@ -144,13 +137,10 @@ class Catalog:
             coll = self.get_collection(name)
             if coll is None:
                 return False
-            part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
-            if os.path.exists(part_dir):
-                shutil.rmtree(part_dir)
+            storage.remove_tree(self._part_dir(coll["id"]))
             if self.postings is not None:
                 self.postings.rewrite(coll["id"], None)
-            if os.path.exists(self._stats_file(coll["id"])):
-                os.remove(self._stats_file(coll["id"]))
+            storage.remove(self._stats_file(coll["id"]))
             self._rewrite_collections(self.collections().filter(F.col("name") != name))
             return True
 
@@ -163,96 +153,50 @@ class Catalog:
         commit protocols are the real-cluster upgrade)."""
         with self._mutex:
             lock = os.path.join(self.root, "catalog.lock")
-            os.makedirs(self.root, exist_ok=True)
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
+            if not storage.create_exclusive(lock, str(os.getpid())):
                 raise RuntimeError(
                     f"catalog at {self.root!r} is locked by another writer "
                     f"({lock} exists); concurrent catalog mutation is not "
                     "supported on plain parquet — remove the stale lock if "
                     "no other writer is alive"
-                ) from None
+                )
             try:
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
                 yield
             finally:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(lock)
+                storage.remove(lock)
 
     def _rewrite_collections(self, df: DataFrame) -> None:
-        """Versioned swap: write ``collections_v{n+1}``, then flip the
-        pointer file atomically (os.replace of a one-line file). A
-        reader always sees a complete live version — there is no window
-        with no catalog on disk (the old rmtree→replace scheme had
-        one), and a crash mid-rewrite leaves the previous version
-        live. Old versions are pruned after the flip."""
+        """Versioned swap (``storage.Versions.commit``). The newest
+        ``keep_versions`` survive so a reader that resolved the pointer
+        just before the flip still completes, and catalog_history()/
+        collections_at() can time-travel over the retained window — the
+        plain-parquet sketch of Delta's version log."""
         with self._write_lock():
-            cur = self._current_collections_dir()
-            base = os.path.basename(cur)
-            ver = int(base.rsplit("_v", 1)[1]) if "_v" in base else 0
-            new_name = f"collections_v{ver + 1}"
-            new_dir = os.path.join(self.root, new_name)
-            df.coalesce(1).write.mode("overwrite").parquet(new_dir)
-            tmp_ptr = self._pointer_path + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(new_name)
-            os.replace(tmp_ptr, self._pointer_path)
-            # prune superseded versions (and the legacy flat dir),
-            # keeping the newest ``keep_versions`` so (a) a reader that
-            # resolved the pointer just before the flip still completes
-            # and (b) history()/collections_at() can time-travel over
-            # the retained window — the plain-parquet sketch of Delta's
-            # version log.
-            # ``base`` (the just-superseded dir) always survives one
-            # more cycle — on the one-time legacy upgrade the flat
-            # "collections" dir would otherwise be rmtree'd under an
-            # in-flight reader that resolved it just before the flip;
-            # it is pruned on the FOLLOWING rewrite instead.
-            keep = {new_name, base} | {
-                f"collections_v{v}"
-                for v in range(max(1, ver + 2 - self.keep_versions), ver + 2)
-            }
-            for entry in os.listdir(self.root):
-                full = os.path.join(self.root, entry)
-                if entry in keep or not os.path.isdir(full):
-                    continue
-                if entry == "collections" or (
-                    entry.startswith("collections_v")
-                    and entry.rsplit("_v", 1)[1].isdigit()
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
+            n = self._versions.commit(
+                lambda path: df.coalesce(1).write.mode("overwrite").parquet(path),
+                keep=self.keep_versions)
+            if n > 1:
+                # a legacy flat dir has had its one cycle of reader grace
+                storage.remove_tree(self.collections_path, ignore_errors=True)
 
     # -- catalog history / time travel -------------------------------------
 
     def catalog_history(self) -> list[dict]:
         """Retained catalog versions, oldest→newest: [{version, path,
         modified_at, is_current}]. Retention is ``keep_versions``."""
-        import datetime
-
-        cur = os.path.basename(self._current_collections_dir())
-        out = []
-        for entry in sorted(os.listdir(self.root)):
-            if not (entry.startswith("collections_v")
-                    and entry.rsplit("_v", 1)[1].isdigit()):
-                continue
-            full = os.path.join(self.root, entry)
-            if not os.path.isdir(full):
-                continue
-            out.append({
-                "version": int(entry.rsplit("_v", 1)[1]),
-                "path": full,
-                "modified_at": datetime.datetime.fromtimestamp(
-                    os.path.getmtime(full), tz=datetime.timezone.utc),
-                "is_current": entry == cur,
-            })
-        return sorted(out, key=lambda d: d["version"])
+        live = self._versions.live()
+        return [{
+            "version": n,
+            "path": self._versions.path(n),
+            "modified_at": datetime.datetime.fromtimestamp(
+                storage.mtime(self._versions.path(n)), tz=datetime.timezone.utc),
+            "is_current": n == live,
+        } for n in self._versions.versions()]
 
     def collections_at(self, version: int) -> DataFrame:
         """Time-travel read of a retained catalog version."""
-        path = os.path.join(self.root, f"collections_v{version}")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        path = self._versions.path(version)
+        if not storage.exists(os.path.join(path, "_SUCCESS")):
             retained = [h["version"] for h in self.catalog_history()]
             raise ValueError(
                 f"catalog version {version} not retained (have {retained}; "
@@ -262,7 +206,7 @@ class Catalog:
     # -- documents (S3, S5, S6) -------------------------------------------
 
     def documents(self, collection_name: str | None = None) -> DataFrame:
-        if not os.path.exists(self.documents_path):
+        if not storage.exists(self.documents_path):
             return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
         df = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(self.documents_path)
         if collection_name is not None:
@@ -399,12 +343,10 @@ class Catalog:
             # dynamic overwrite of an EMPTY frame writes no partitions
             # and would silently leave the old files — drop the
             # partition directory instead
-            part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
-            if os.path.exists(part_dir):
-                shutil.rmtree(part_dir)
+            storage.remove_tree(self._part_dir(coll["id"]))
             if self.postings is not None:
                 self.postings.rewrite(coll["id"], None)
-            self._set_stats(coll["id"], 0)
+            self._store_stats(coll["id"], 0)
             return before
         with self._dynamic_overwrite():
             (
@@ -417,7 +359,7 @@ class Catalog:
             # re-read: the lazy `remaining` plan is bound to the
             # overwritten files
             self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._set_stats(coll["id"], after)
+        self._store_stats(coll["id"], after)
         return before - after
 
     def upsert_documents(self, collection_name: str, docs: DataFrame) -> dict:
@@ -456,7 +398,7 @@ class Catalog:
         n_after = self.documents(collection_name).count()
         if self.postings is not None:
             self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._set_stats(coll["id"], n_after)
+        self._store_stats(coll["id"], n_after)
         return {
             "inserted": n_after - n_before if n_after >= n_before else 0,
             "updated": n_in - max(n_after - n_before, 0),
@@ -496,30 +438,16 @@ class Catalog:
         return os.path.join(self.stats_path, f"collection_{collection_id}.json")
 
     def _load_stats(self, collection_id: int) -> dict | None:
-        path = self._stats_file(collection_id)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+        return storage.read_json(self._stats_file(collection_id))
 
     def _store_stats(self, collection_id: int, document_count: int) -> dict:
         """Write the stats row. The count is maintained exactly by the
         mutation's own arithmetic; the byte size is a listing of the
         partition directory the mutation just wrote (OS-cache-warm,
-        no Spark job). Atomic rename so readers never see a torn row."""
-        size = 0
-        part_dir = self._part_dir(collection_id)
-        if os.path.exists(part_dir):
-            for dirpath, _dirs, files in os.walk(part_dir):
-                size += sum(
-                    os.path.getsize(os.path.join(dirpath, f)) for f in files
-                )
-        st = {"document_count": int(document_count), "size_bytes": size}
-        os.makedirs(self.stats_path, exist_ok=True)
-        tmp = self._stats_file(collection_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._stats_file(collection_id))
+        no Spark job). Atomic write so readers never see a torn row."""
+        st = {"document_count": int(document_count),
+              "size_bytes": storage.tree_size(self._part_dir(collection_id))}
+        storage.write_json(self._stats_file(collection_id), st)
         return st
 
     def _bump_stats(self, collection_id: int, delta: int) -> None:
@@ -535,9 +463,6 @@ class Catalog:
             if st is not None:
                 self._store_stats(collection_id, st["document_count"] + delta)
 
-    def _set_stats(self, collection_id: int, document_count: int) -> None:
-        self._store_stats(collection_id, document_count)
-
     def compact_collection(self, collection_name: str, *,
                            target_files: int = 1) -> dict:
         """Maintenance: rewrite a collection's partition into
@@ -546,13 +471,12 @@ class Catalog:
         the small-file count, not data volume, kills scan planning).
         Same single-partition rewrite envelope as a targeted delete."""
         coll = self._resolve(collection_name)
-        part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
-        n_before = 0
-        if os.path.exists(part_dir):
-            n_before = sum(
-                1 for _, _, files in os.walk(part_dir)
-                for f in files if f.endswith(".parquet")
-            )
+        part_dir = self._part_dir(coll["id"])
+
+        def n_files() -> int:
+            return sum(f.endswith(".parquet") for f in storage.list_files(part_dir))
+
+        n_before = n_files()
         cur = self.documents(collection_name)
         with self._dynamic_overwrite():
             (
@@ -562,10 +486,7 @@ class Catalog:
                 .write.mode("overwrite").partitionBy("collection_id")
                 .parquet(self.documents_path)
             )
-        n_after = sum(
-            1 for _, _, files in os.walk(part_dir)
-            for f in files if f.endswith(".parquet")
-        )
+        n_after = n_files()
         st = self._load_stats(coll["id"])
         if st is not None:  # row count unchanged; byte size rewritten
             self._store_stats(coll["id"], st["document_count"])

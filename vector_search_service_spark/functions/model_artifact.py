@@ -35,6 +35,7 @@ weights, integer token hashing).
 from __future__ import annotations
 
 import hashlib
+import io
 import os
 import re
 from collections.abc import Iterator
@@ -45,6 +46,8 @@ import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import storage
 
 _SPLIT = re.compile("[^a-z0-9]+")
 
@@ -74,12 +77,11 @@ class ProjectionModel:
         return cls(w)
 
     def save(self, path: str) -> str:
-        """Serialize to a single ``.npz`` artifact (atomic rename)."""
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            np.savez(f, weights=self.weights,
-                     format_version=np.int64(self.FORMAT_VERSION))
-        os.replace(tmp, path)
+        """Serialize to a single ``.npz`` artifact (atomic write)."""
+        buf = io.BytesIO()
+        np.savez(buf, weights=self.weights,
+                 format_version=np.int64(self.FORMAT_VERSION))
+        storage.write_atomic(path, buf.getvalue())
         return path
 
     @classmethod

@@ -13,18 +13,20 @@ Spark-native design:
 - **one JSON object per line** rendered with ``to_json`` JVM-side (no
   Python in the write path) and written with the text writer, so the
   payload column is exactly the line;
-- **manifest**: per-shard line counts + total, written AFTER the data
-  (a reader that sees the manifest sees complete shards — the poor
-  man's commit protocol, same role as ``_SUCCESS`` but content-aware).
+- **manifest**: per-shard line counts + total, written atomically
+  (``storage.write_json``) AFTER the data (a reader that sees the
+  manifest sees complete shards — the poor man's commit protocol, same
+  role as ``_SUCCESS`` but content-aware).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import storage
 
 
 def write_jsonl_shards(df: DataFrame, path: str, *, n_shards: int = 8,
@@ -52,8 +54,8 @@ def write_jsonl_shards(df: DataFrame, path: str, *, n_shards: int = 8,
         "lines_per_shard": {str(k): int(v) for k, v in sorted(counts.items())},
         "columns": cols,
     }
-    with open(os.path.join(path, "MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    storage.write_json(os.path.join(path, "MANIFEST.json"), manifest,
+                       indent=1, sort_keys=True)
     return manifest
 
 

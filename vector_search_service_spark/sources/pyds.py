@@ -34,6 +34,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from .. import storage
 from .xml import SEARCHABLE_FIELDS
 
 FIELD_NAMES: tuple[str, ...] = tuple(name for name, _ in SEARCHABLE_FIELDS)
@@ -287,7 +288,7 @@ class JsonlManifestWriter(DataSourceWriter):
         path = options.get("path")
         if not path:
             raise ValueError("jsonl_manifest sink requires a path")
-        self.path = path
+        self.path = storage.local_path(path)
         self.overwrite = overwrite
 
     def write(self, rows) -> _JsonlCommit:
@@ -311,17 +312,11 @@ class JsonlManifestWriter(DataSourceWriter):
         return _JsonlCommit(tmp, final_name, n)
 
     def commit(self, messages) -> None:
-        import glob
-        import json
-        import shutil
-
-        os.makedirs(self.path, exist_ok=True)
         files = {}
         for m in messages:
             if m is None:
                 continue
-            dst = os.path.join(self.path, m.final_name)
-            os.replace(m.tmp_path, dst)  # atomic publish per shard
+            storage.rename(m.tmp_path, os.path.join(self.path, m.final_name))  # atomic
             files[m.final_name] = m.n_rows
         if self.overwrite:
             # mode("overwrite") contract (advice r3): a previous larger
@@ -329,23 +324,20 @@ class JsonlManifestWriter(DataSourceWriter):
             # manifest — glob readers (spark.read.json on part-*.jsonl)
             # would mix old and new data. Delete every shard not in
             # THIS commit, after the new shards are in place.
-            for old in glob.glob(os.path.join(self.path, "part-*.jsonl")):
-                if os.path.basename(old) not in files:
-                    os.remove(old)
-        shutil.rmtree(os.path.join(self.path, "_tmp"), ignore_errors=True)
+            for old in storage.list_files(self.path):
+                if (old.startswith("part-") and old.endswith(".jsonl")
+                        and old not in files):
+                    storage.remove(os.path.join(self.path, old))
+        storage.remove_tree(os.path.join(self.path, "_tmp"), ignore_errors=True)
         manifest = {
             "files": dict(sorted(files.items())),
             "total_rows": sum(files.values()),
         }
-        tmp = os.path.join(self.path, "MANIFEST.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, "MANIFEST.json"))
+        storage.write_json(os.path.join(self.path, "MANIFEST.json"), manifest,
+                           indent=2, sort_keys=True)
 
     def abort(self, messages) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.path, "_tmp"), ignore_errors=True)
+        storage.remove_tree(os.path.join(self.path, "_tmp"), ignore_errors=True)
 
 
 class JsonlManifestDataSource(DataSource):

@@ -17,9 +17,9 @@ is made durable across triggers.
 At 100 TB: the rollup table is tiny (groups, not events), so the merge
 groupBy shuffles only (touched ∪ existing) group rows; the event
 stream is aggregated map-side within each micro-batch. The versioned
-swap write gives readers an always-live table (same mechanism as
-``catalog._rewrite_collections``). With Delta in place of parquet the
-swap becomes a MERGE on the same keys.
+swap write (``storage.Versions``, the protocol the catalog and the
+postings store use) gives readers an always-live table. With Delta in
+place of parquet the swap becomes a MERGE on the same keys.
 
 Proven in tests/test_rollup.py: replaying the events table through
 N micro-batches yields byte-identical rollup rows to one batch
@@ -28,11 +28,10 @@ aggregation of the full table.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import storage
 
 KEYS = ("window_start", "event_type")
 # value carried as exact integer micros (see decimal_exact_revenue)
@@ -76,30 +75,22 @@ def finalize(rollup: DataFrame) -> DataFrame:
 
 
 class RollupStore:
-    """Versioned-parquet rollup table with an atomic pointer flip
-    (readers always see a complete version; same write-safety story as
-    the catalog's collections swap)."""
+    """Versioned-parquet rollup table (``root/v{batch_id:010d}/`` plus a
+    ``root/CURRENT`` pointer): readers always see a complete version, and
+    the applied-batch watermark is the live version's batch id."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark, self.root = spark, root
-        os.makedirs(root, exist_ok=True)
-
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "CURRENT")
+        self.spark = spark
+        self._versions = storage.Versions(root, width=10, pointer="CURRENT")
 
     def _read_pointer(self) -> tuple[str, int] | None:
-        ptr = self._pointer()
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            version, batch = f.read().strip().split("\n")
-        return version, int(batch)
+        """(live version name, applied batch id), None before the first batch."""
+        batch = self._versions.live()
+        return None if batch is None else (self._versions.name(batch), batch)
 
     def current(self) -> DataFrame | None:
-        cur = self._read_pointer()
-        if cur is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.root, cur[0]))
+        live = self._versions.live_path()
+        return None if live is None else self.spark.read.parquet(live)
 
     def write_merged(self, batch_rollup: DataFrame, batch_id: int) -> None:
         """Monoid-merge one micro-batch. Exactly-once under replay:
@@ -111,22 +102,13 @@ class RollupStore:
             return  # replayed batch already folded in
         prev = self.current()
         merged = batch_rollup if prev is None else merge_rollups(prev, batch_rollup)
-        version = f"v{batch_id:010d}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.root, version))
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{version}\n{batch_id}")
-        os.replace(tmp, self._pointer())  # atomic flip
-        # prune superseded versions, keeping current + previous (an
-        # in-flight reader that resolved the pointer just before the
-        # flip still completes) — a long-running maintenance stream
-        # would otherwise grow one full parquet copy per micro-batch
-        keep = {version} | ({cur[0]} if cur is not None else set())
-        for entry in os.listdir(self.root):
-            full = os.path.join(self.root, entry)
-            if (entry not in keep and os.path.isdir(full)
-                    and entry.startswith("v") and entry[1:].isdigit()):
-                shutil.rmtree(full, ignore_errors=True)
+        # keep current + previous (an in-flight reader that resolved
+        # the pointer just before the flip still completes) — a
+        # long-running maintenance stream would otherwise grow one full
+        # parquet copy per micro-batch
+        self._versions.commit(
+            lambda path: merged.write.mode("overwrite").parquet(path),
+            keep=2, version=batch_id)
 
 
 def start_rollup_maintenance(spark: SparkSession, events_stream: DataFrame,

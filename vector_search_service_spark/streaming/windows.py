@@ -68,9 +68,10 @@ def replay_available_now(spark, batch_df: DataFrame, build_query, *,
     (the memory sink holds rows in the session, not on disk)."""
     import glob
     import os
-    import shutil
     import tempfile
     import uuid
+
+    from .. import storage
 
     tag = uuid.uuid4().hex[:12]
     root = tempfile.mkdtemp(prefix=f"{prefix}_{tag}_")
@@ -117,7 +118,7 @@ def replay_available_now(spark, batch_df: DataFrame, build_query, *,
             global LAST_PROGRESS
             LAST_PROGRESS = [p for p in q.recentProgress if p is not None]
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        storage.remove_tree(root, ignore_errors=True)
     return spark.table(table)
 
 
