@@ -369,6 +369,40 @@ def test_collection_stats_refresh_heals_stale_file(catalog, spark):
     assert catalog.collection_stats("rf")["document_count"] == 4
 
 
+def test_partition_rewrites_leave_session_conf_alone(catalog, spark, monkeypatch):
+    """Delete, upsert and compact overwrite one partition with a
+    per-write dynamic overwrite option: they never set session
+    configuration (a concurrent static overwrite on the shared session
+    would inherit it), and the other collection's partition survives."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(f"d{i}", f"content {i}", {}, None, None) for i in ids],
+            "document_id string, content string, "
+            "doc_metadata map<string,string>, "
+            "content_lexemes array<string>, embedding array<float>",
+        )
+
+    catalog.create_collection("mine")
+    catalog.create_collection("other")
+    catalog.add_documents("mine", rows(range(4)))
+    catalog.add_documents("other", rows(range(3)))
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    calls = []
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, key, value: calls.append((key, value)))
+    assert catalog.delete_documents("mine", ["d0"]) == 1
+    assert catalog.upsert_documents("mine", rows([3, 9])) == {"inserted": 1, "updated": 1}
+    assert catalog.compact_collection("mine")["files_after"] == 1
+    monkeypatch.undo()
+    assert calls == []
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
+    assert sorted(r["document_id"] for r in catalog.documents("mine").collect()) == [
+        "d1", "d2", "d3", "d9"]
+    assert catalog.documents("other").count() == 3
+
+
 def test_add_documents_evaluates_nondeterministic_input_once(catalog, spark):
     """r9 advisor (low): the batch is materialized before validation,
     so a non-deterministic input cannot pass the dimension check on one

@@ -192,3 +192,24 @@ def test_batch_search_route(client):
     assert out["results"][0]["total_found"] >= 1
     assert out["results"][1]["total_found"] == 0
     assert client.post("/api/v1/search/batch", json={}).status_code == 422
+
+
+def test_search_unknown_collection_is_404(client, spark, tmp_path):
+    """An unknown collection is a 404 with FastAPI's error body on both
+    search routes — before any document is stored and after — while a
+    known collection with no documents answers 200 with no results."""
+    from vector_search_service_spark.api import create_app
+    from vector_search_service_spark.service import SearchService
+
+    empty = create_app(SearchService(spark, str(tmp_path / "empty"))).test_client()
+    for c in (empty, client):
+        for path, body in (("/api/v1/search/similarity", {"query": "spark"}),
+                           ("/api/v1/search/batch", {"queries": ["spark"]})):
+            r = c.post(path, json={**body, "collection_id": "ghost"})
+            assert r.status_code == 404, (path, r.status_code)
+            assert r.get_json() == {"detail": "Collection 'ghost' not found"}
+
+    assert empty.post("/api/v1/collections", json={"name": "bare"}).status_code == 201
+    r = empty.post("/api/v1/search/similarity",
+                   json={"query": "spark", "collection_id": "bare"})
+    assert r.status_code == 200 and r.get_json()["results"] == []

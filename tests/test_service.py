@@ -217,3 +217,109 @@ def test_batch_ingest_single_distributed_write(svc, monkeypatch):
     chunks = svc.catalog.documents("bulk50").collect()
     sizes = [int(r["doc_metadata"]["chunk_size"]) for r in chunks]
     assert max(sizes) <= 460  # no chunk exceeds its per-doc cap
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches on this thread, counted through a job
+    group once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_lookups_launch_no_spark_jobs(spark, tmp_path):
+    """Collection metadata is a JSON document per catalog version, so a
+    lookup is a file read: resolving, listing and describing a
+    collection (stats maintained) launch no Spark job, and a search
+    pays only for its postings probe and ranked scan."""
+    from vector_search_service_spark.service import SearchService
+
+    svc = SearchService(spark, str(tmp_path / "store"), maintain_fts_index=True)
+    for name in ("a", "b", "c"):
+        svc.ingest_document(f"spark shuffle {name} exchange " * 30, collection_id=name)
+    cat = svc.catalog
+    assert _jobs(spark, lambda: cat.get_collection("a")) == 0
+    assert _jobs(spark, cat.list_collections) == 0
+    assert cat._load_stats(cat.get_collection("a")["id"]) is not None
+    assert _jobs(spark, lambda: svc.get_collection_info("a")) == 0
+    assert _jobs(spark, svc.search_collections) == 0
+    out = {}
+    n = _jobs(spark, lambda: out.update(
+        svc.similarity_search("spark shuffle", collection_id="a")))
+    assert out["total_found"] >= 1
+    assert n == 3  # measured; 6 with the parquet catalog and countDistinct
+
+
+def test_catalog_version_is_one_json_document(spark, tmp_path):
+    """On-disk format: the live catalog version holds collections.json
+    (an array of rows); a version dir from the parquet-era layout is
+    refused loudly instead of reading as an empty catalog."""
+    import json
+
+    from vector_search_service_spark.catalog import COLLECTION_SCHEMA, Catalog
+
+    root = tmp_path / "cat"
+    cat = Catalog(spark, str(root))
+    cat.create_collection("a", metadata={"k": "v"})
+    live = root / (root / "collections.current").read_text().strip()
+    assert sorted(p.name for p in live.iterdir()) == ["collections.json"]
+    (row,) = json.loads((live / "collections.json").read_text())
+    assert [row[f.name] for f in COLLECTION_SCHEMA.fields[:6]] == [
+        1, "a", None, {"k": "v"}, 1024, "cosine"]
+
+    old = tmp_path / "parquet_era"
+    spark.createDataFrame([], COLLECTION_SCHEMA).write.parquet(
+        str(old / "collections_v1"))
+    (old / "collections.current").write_text("collections_v1")
+    with pytest.raises(ValueError, match="parquet-era"):
+        Catalog(spark, str(old)).list_collections()
+
+
+def test_health_reports_catalog_state(svc):
+    """health() reads the live catalog version: a pointer that names no
+    version takes the catalog, and the service, down."""
+    import os
+
+    svc.catalog.create_collection("h")
+    h = svc.health()
+    assert h["status"] == "healthy" and h["components"]["catalog"] == "up"
+    with open(os.path.join(svc.catalog.root, "collections.current"), "w") as f:
+        f.write("not-a-version")
+    h = svc.health()
+    assert h["status"] == "unhealthy"
+    assert h["components"] == {"spark": "up", "catalog": "down"}
+
+
+def test_catalog_read_re_resolves_a_pruned_version(spark, tmp_path, monkeypatch):
+    """A reader that resolved the pointer just before two commits finds
+    its version pruned and re-resolves to the live one; a pointer that
+    names a version no longer on disk raises instead of looping."""
+    from vector_search_service_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.create_collection("a")
+    load, raced = Catalog._load, []
+
+    def racing(self, version):
+        if not raced:
+            raced.append(version)
+            self.create_collection("b")
+            self.create_collection("c")  # prunes `version`
+        return load(self, version)
+
+    monkeypatch.setattr(Catalog, "_load", racing)
+    assert [c["name"] for c in cat.list_collections()] == ["a", "b", "c"]
+    assert raced and raced[0] not in cat._versions.versions()
+    monkeypatch.undo()
+
+    (tmp_path / "cat" / "collections.current").write_text("collections_v99")
+    with pytest.raises(ValueError, match="missing"):
+        cat.list_collections()

@@ -111,11 +111,14 @@ def create_app(service):
             raise _Unprocessable("query is required")
         limit = bounded(b.get("limit", 10), 1, 100, "limit")
         min_score = bounded(b.get("min_score"), 0.0, 1.0, "min_score")
-        return jsonify(service.similarity_search(
-            b["query"], collection_id=b.get("collection_id", "default"),
-            limit=limit, min_score=min_score,
-            metadata_filter=b.get("metadata_filter"),
-        ))
+        try:
+            return jsonify(service.similarity_search(
+                b["query"], collection_id=b.get("collection_id", "default"),
+                limit=limit, min_score=min_score,
+                metadata_filter=b.get("metadata_filter"),
+            ))
+        except LookupError as e:  # unknown collection
+            return err(404, str(e))
 
     @app.post("/api/v1/search/batch")
     def search_batch():
@@ -123,10 +126,13 @@ def create_app(service):
         if not isinstance(b.get("queries"), list) or not b["queries"]:
             raise _Unprocessable("queries is required")
         limit = bounded(b.get("limit", 10), 1, 100, "limit")
-        return jsonify(service.batch_search(
-            b["queries"], collection_id=b.get("collection_id", "default"),
-            limit=limit, metadata_filter=b.get("metadata_filter"),
-        ))
+        try:
+            return jsonify(service.batch_search(
+                b["queries"], collection_id=b.get("collection_id", "default"),
+                limit=limit, metadata_filter=b.get("metadata_filter"),
+            ))
+        except LookupError as e:  # unknown collection
+            return err(404, str(e))
 
     @app.get("/api/v1/search/collections")
     def search_collections():

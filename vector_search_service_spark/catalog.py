@@ -1,10 +1,13 @@
 """Collection catalog + mutable document store on immutable parquet.
 
 Mirrors the reference's data model (SURVEY.md §1): a ``collections``
-catalog table and one shared ``documents`` chunk table, documents
+catalog and one shared ``documents`` chunk table, documents
 partitioned by ``collection_id``. PostgreSQL features are re-owned
 explicitly:
 
+- the ``collections`` table → metastore-style metadata: each catalog
+  version is one JSON document committed through ``storage.Versions``,
+  so resolving a collection is a file read, never a Spark job;
 - uniqueness of collection ``name`` (``src/db/models.py:16``) →
   existence-check-then-append (S8);
 - FK ``ON DELETE CASCADE`` (``scripts/init-db.sql:20``) → write-path
@@ -21,13 +24,12 @@ explicitly:
 
 Timestamps (`G7`): Spark has no triggers — ``created_at``/``updated_at``
 are set by this writer.
-Catalog files outside the parquet tables (version pointer and commit
-protocol, stats rows, lock file) go through ``storage.py``.
+Catalog files outside the documents table (versions and pointer, stats
+rows, lock file) go through ``storage.py``.
 """
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 import threading
@@ -60,11 +62,21 @@ DOCUMENT_SCHEMA = T.StructType([
     T.StructField("updated_at", T.TimestampType(), False),
 ])
 
+#: a catalog version's one file: a JSON array of COLLECTION_SCHEMA rows
+COLLECTIONS_FILE = "collections.json"
+
+
+def _decode(row: dict) -> dict:
+    """Stored row → returned row: ISO-8601 UTC → naive local datetime,
+    as PySpark collects a ``TimestampType``."""
+    return {**row, **{k: datetime.datetime.fromisoformat(row[k]).astimezone()
+                      .replace(tzinfo=None) for k in ("created_at", "updated_at")}}
+
 
 class Catalog:
-    """Engine-owned table layout under ``root``:
-    ``root/collections/`` (tiny, overwrite-on-change) and
-    ``root/documents/collection_id=<id>/`` (hive-partitioned)."""
+    """Engine-owned layout under ``root``: catalog versions
+    ``collections_v<n>/collections.json`` behind ``collections.current``,
+    and ``documents/collection_id=<id>/`` (hive-partitioned)."""
 
     def __init__(self, spark: SparkSession, root: str, *,
                  maintain_fts_index: bool = False, keep_versions: int = 2):
@@ -74,7 +86,6 @@ class Catalog:
         # plus the immediately-previous for in-flight readers). Larger
         # values enable time travel via collections_at()/history().
         self.keep_versions = max(2, keep_versions)
-        self.collections_path = os.path.join(root, "collections")
         self.documents_path = os.path.join(root, "documents")
         self.stats_path = os.path.join(root, "stats")
         self._versions = storage.Versions(
@@ -93,19 +104,33 @@ class Catalog:
 
     # -- collections (S1, S2, S8) -----------------------------------------
 
-    def collections(self) -> DataFrame:
-        # no pointer yet: the legacy unversioned layout
-        live = self._versions.live_path() or self.collections_path
-        if not storage.exists(os.path.join(live, "_SUCCESS")):
-            return self.spark.createDataFrame([], COLLECTION_SCHEMA)
-        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(live)
+    def _load(self, version: int) -> list[dict] | None:
+        """Stored rows of ``version``, None if it is not on disk; a
+        version without the JSON document (parquet-era or damaged) raises."""
+        path = self._versions.path(version)
+        rows = storage.read_json(os.path.join(path, COLLECTIONS_FILE))
+        if rows is None and storage.exists(path):
+            raise ValueError(f"catalog version {path} holds no {COLLECTIONS_FILE} "
+                             "(a parquet-era layout, or damage)")
+        return rows
+
+    def _rows(self) -> list[dict]:
+        """Stored rows of the live version ([] before the first commit),
+        re-resolving a version pruned after the pointer read."""
+        missing = None
+        while (n := self._versions.live()) is not None:
+            if (rows := self._load(n)) is not None:
+                return rows
+            if n == missing:
+                raise ValueError(f"live catalog version {n} is missing")
+            missing = n
+        return []
 
     def get_collection(self, name: str) -> dict | None:
-        rows = self.collections().filter(F.col("name") == name).limit(1).collect()
-        return rows[0].asDict(recursive=True) if rows else None
+        return next((_decode(r) for r in self._rows() if r["name"] == name), None)
 
     def list_collections(self) -> list[dict]:
-        return [r.asDict(recursive=True) for r in self.collections().orderBy("id").collect()]
+        return [_decode(r) for r in sorted(self._rows(), key=lambda r: r["id"])]
 
     def create_collection(self, name: str, description: str | None = None, *,
                           embedding_dimension: int = 1024,
@@ -116,19 +141,18 @@ class Catalog:
         by check-then-append (single-writer catalog assumption; a real
         deployment would use Delta MERGE ``whenNotMatchedInsert``)."""
         with self._mutex:  # check-then-append is atomic in-process
-            existing = self.get_collection(name)
-            if existing is not None:
+            rows = self._rows()
+            if any(r["name"] == name for r in rows):
                 raise ValueError(f"collection {name!r} already exists")
-            cur = self.collections()
-            next_id = (cur.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]["m"] or 0) + 1
-            row_df = self.spark.createDataFrame(
-                [(next_id, name, description, metadata or {}, embedding_dimension, distance_function)],
-                T.StructType(COLLECTION_SCHEMA.fields[:6]),
-            ).withColumn("created_at", F.current_timestamp()) \
-             .withColumn("updated_at", F.current_timestamp())
-            self._rewrite_collections(cur.unionByName(row_df))
-            self._store_stats(next_id, 0)  # stats maintained from birth
-            return self.get_collection(name)  # re-read: timestamps materialized
+            now = datetime.datetime.now(datetime.timezone.utc).isoformat()
+            row = {"id": max((r["id"] for r in rows), default=0) + 1, "name": name,
+                   "description": description, "doc_metadata": dict(metadata or {}),
+                   "embedding_dimension": embedding_dimension,
+                   "distance_function": distance_function,
+                   "created_at": now, "updated_at": now}
+            self._rewrite_collections([*rows, row])
+            self._store_stats(row["id"], 0)  # stats maintained from birth
+            return _decode(row)
 
     def delete_collection(self, name: str) -> bool:
         """S7 — engine-owned cascade: documents partition first, then
@@ -141,43 +165,30 @@ class Catalog:
             if self.postings is not None:
                 self.postings.rewrite(coll["id"], None)
             storage.remove(self._stats_file(coll["id"]))
-            self._rewrite_collections(self.collections().filter(F.col("name") != name))
+            self._rewrite_collections([r for r in self._rows() if r["name"] != name])
             return True
 
-    @contextlib.contextmanager
-    def _write_lock(self):
-        """Catalog mutation guard: in-process RLock (the service's own
-        job threads serialize) + an advisory cross-process lock file so
-        a SECOND writer process fails loudly instead of corrupting the
-        swap (single-writer is the documented contract; Delta/Iceberg
-        commit protocols are the real-cluster upgrade)."""
+    def _rewrite_collections(self, rows: list[dict]) -> None:
+        """Versioned swap (``storage.Versions.commit``) under the mutex and
+        an advisory cross-process lock file: a SECOND writer process fails
+        loudly instead of corrupting the swap (single-writer is the
+        documented contract; Delta/Iceberg commits are the real-cluster
+        upgrade). The newest ``keep_versions`` survive for in-flight
+        readers and catalog_history()/collections_at() time travel."""
         with self._mutex:
             lock = os.path.join(self.root, "catalog.lock")
             if not storage.create_exclusive(lock, str(os.getpid())):
                 raise RuntimeError(
                     f"catalog at {self.root!r} is locked by another writer "
                     f"({lock} exists); concurrent catalog mutation is not "
-                    "supported on plain parquet — remove the stale lock if "
+                    "supported on plain files — remove the stale lock if "
                     "no other writer is alive"
                 )
             try:
-                yield
+                self._versions.commit(lambda path: storage.write_json(
+                    os.path.join(path, COLLECTIONS_FILE), rows), keep=self.keep_versions)
             finally:
                 storage.remove(lock)
-
-    def _rewrite_collections(self, df: DataFrame) -> None:
-        """Versioned swap (``storage.Versions.commit``). The newest
-        ``keep_versions`` survive so a reader that resolved the pointer
-        just before the flip still completes, and catalog_history()/
-        collections_at() can time-travel over the retained window — the
-        plain-parquet sketch of Delta's version log."""
-        with self._write_lock():
-            n = self._versions.commit(
-                lambda path: df.coalesce(1).write.mode("overwrite").parquet(path),
-                keep=self.keep_versions)
-            if n > 1:
-                # a legacy flat dir has had its one cycle of reader grace
-                storage.remove_tree(self.collections_path, ignore_errors=True)
 
     # -- catalog history / time travel -------------------------------------
 
@@ -195,26 +206,29 @@ class Catalog:
 
     def collections_at(self, version: int) -> DataFrame:
         """Time-travel read of a retained catalog version."""
-        path = self._versions.path(version)
-        if not storage.exists(os.path.join(path, "_SUCCESS")):
+        rows = self._load(version)
+        if rows is None:
             retained = [h["version"] for h in self.catalog_history()]
             raise ValueError(
                 f"catalog version {version} not retained (have {retained}; "
                 f"raise keep_versions to widen the window)")
-        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(path)
+        return self.spark.createDataFrame(list(map(_decode, rows)), COLLECTION_SCHEMA)
 
     # -- documents (S3, S5, S6) -------------------------------------------
 
     def documents(self, collection_name: str | None = None) -> DataFrame:
+        """The documents table, or one collection's partition of it
+        (``ValueError`` for an unknown collection)."""
+        if collection_name is not None:
+            return self.collection_documents(self._resolve(collection_name)["id"])
         if not storage.exists(self.documents_path):
             return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
-        df = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(self.documents_path)
-        if collection_name is not None:
-            coll = self._resolve(collection_name)
-            # literal partition predicate → partition pruning (J1 done
-            # driver-side, exactly like the reference's two-step resolve)
-            df = df.filter(F.col("collection_id") == coll["id"])
-        return df
+        return self.spark.read.schema(DOCUMENT_SCHEMA).parquet(self.documents_path)
+
+    def collection_documents(self, collection_id: int) -> DataFrame:
+        """One collection's documents by id: a literal partition predicate
+        → partition pruning (J1 done driver-side, like the reference)."""
+        return self.documents().filter(F.col("collection_id") == collection_id)
 
     def add_documents(self, collection_name: str, docs: DataFrame) -> int:
         """S5 — append sink. ``docs`` must carry the DOCUMENT_SCHEMA
@@ -322,45 +336,35 @@ class Catalog:
         rewrite, not the table's). Serialized on the catalog mutex
         (shared-Catalog threads; stats read-modify-write)."""
         with self._mutex:
-            return self._delete_documents_locked(collection_name, document_ids)
-
-    def _delete_documents_locked(self, collection_name: str,
-                                 document_ids: list[str]) -> int:
-        coll = self._resolve(collection_name)
-        cur = self.documents(collection_name)
-        before = cur.count()
-        ids_df = self.spark.createDataFrame(
-            [(d,) for d in document_ids], "document_id string"
-        )
-        # bound: the API caps delete batches (max_batch_documents = 50,
-        # reference src/config/settings.py:53) — the anti_join_delete
-        # discipline (r10 audit)
-        remaining = cur.join(F.broadcast(ids_df), "document_id", "left_anti")
-        after = remaining.count()
-        if after == before:
-            return 0
-        if after == 0:
-            # dynamic overwrite of an EMPTY frame writes no partitions
-            # and would silently leave the old files — drop the
-            # partition directory instead
-            storage.remove_tree(self._part_dir(coll["id"]))
-            if self.postings is not None:
-                self.postings.rewrite(coll["id"], None)
-            self._store_stats(coll["id"], 0)
-            return before
-        with self._dynamic_overwrite():
-            (
-                remaining.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
+            coll = self._resolve(collection_name)
+            cur = self.collection_documents(coll["id"])
+            before = cur.count()
+            ids_df = self.spark.createDataFrame(
+                [(d,) for d in document_ids], "document_id string"
             )
-        if self.postings is not None:
-            # re-read: the lazy `remaining` plan is bound to the
-            # overwritten files
-            self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._store_stats(coll["id"], after)
-        return before - after
+            # bound: the API caps delete batches (max_batch_documents = 50,
+            # reference src/config/settings.py:53) — the anti_join_delete
+            # discipline (r10 audit)
+            remaining = cur.join(F.broadcast(ids_df), "document_id", "left_anti")
+            after = remaining.count()
+            if after == before:
+                return 0
+            if after == 0:
+                # dynamic overwrite of an EMPTY frame writes no partitions
+                # and would silently leave the old files — drop the
+                # partition directory instead
+                storage.remove_tree(self._part_dir(coll["id"]))
+                if self.postings is not None:
+                    self.postings.rewrite(coll["id"], None)
+                self._store_stats(coll["id"], 0)
+                return before
+            self._overwrite_partition(coll["id"], remaining)
+            if self.postings is not None:
+                # re-read: the lazy `remaining` plan is bound to the
+                # overwritten files
+                self.postings.rewrite(coll["id"], self.collection_documents(coll["id"]))
+            self._store_stats(coll["id"], after)
+            return before - after
 
     def upsert_documents(self, collection_name: str, docs: DataFrame) -> dict:
         """Merge-by-key (Delta MERGE stand-in on plain parquet): rows
@@ -370,39 +374,29 @@ class Catalog:
         targeted delete. Serialized on the catalog mutex (shared-Catalog
         threads; stats read-modify-write)."""
         with self._mutex:
-            return self._upsert_documents_locked(collection_name, docs)
-
-    def _upsert_documents_locked(self, collection_name: str, docs: DataFrame) -> dict:
-        coll = self._resolve(collection_name)
-        cur = self.documents(collection_name)
-        incoming = (
-            docs.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .withColumn("created_at", F.current_timestamp())
-                .withColumn("updated_at", F.current_timestamp())
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-        )
-        n_in = incoming.count()
-        n_before = cur.count()
-        keys = incoming.select("document_id").distinct()
-        # bound: upsert batches arrive through the same API batch cap
-        # as deletes (≤ 50 docs/request; r10 audit)
-        kept = cur.join(F.broadcast(keys), "document_id", "left_anti")
-        merged = kept.unionByName(incoming)
-        with self._dynamic_overwrite():
-            (
-                merged.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
+            coll = self._resolve(collection_name)
+            cur = self.collection_documents(coll["id"])
+            incoming = (
+                docs.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
+                    .withColumn("created_at", F.current_timestamp())
+                    .withColumn("updated_at", F.current_timestamp())
+                    .select([f.name for f in DOCUMENT_SCHEMA.fields])
             )
-        n_after = self.documents(collection_name).count()
-        if self.postings is not None:
-            self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._store_stats(coll["id"], n_after)
-        return {
-            "inserted": n_after - n_before if n_after >= n_before else 0,
-            "updated": n_in - max(n_after - n_before, 0),
-        }
+            n_in = incoming.count()
+            n_before = cur.count()
+            keys = incoming.select("document_id").distinct()
+            # bound: upsert batches arrive through the same API batch cap
+            # as deletes (≤ 50 docs/request; r10 audit)
+            kept = cur.join(F.broadcast(keys), "document_id", "left_anti")
+            self._overwrite_partition(coll["id"], kept.unionByName(incoming))
+            n_after = self.collection_documents(coll["id"]).count()
+            if self.postings is not None:
+                self.postings.rewrite(coll["id"], self.collection_documents(coll["id"]))
+            self._store_stats(coll["id"], n_after)
+            return {
+                "inserted": n_after - n_before if n_after >= n_before else 0,
+                "updated": n_in - max(n_after - n_before, 0),
+            }
 
     def collection_stats(self, collection_name: str, *, refresh: bool = False) -> dict:
         """A1 + A2 — document count and storage bytes
@@ -425,7 +419,7 @@ class Catalog:
             st = None if refresh else self._load_stats(coll["id"])
             if st is None:  # legacy/backfill path or explicit refresh
                 st = self._store_stats(
-                    coll["id"], self.documents(collection_name).count()
+                    coll["id"], self.collection_documents(coll["id"]).count()
                 )
         return {"collection": coll["name"], **st}
 
@@ -469,28 +463,24 @@ class Catalog:
         ``target_files`` files (the OPTIMIZE/compaction pass —
         streaming ingest appends a file per micro-batch, and at scale
         the small-file count, not data volume, kills scan planning).
-        Same single-partition rewrite envelope as a targeted delete."""
-        coll = self._resolve(collection_name)
-        part_dir = self._part_dir(coll["id"])
+        Same single-partition rewrite envelope as a targeted delete,
+        serialized on the catalog mutex like every other mutation."""
+        with self._mutex:
+            coll = self._resolve(collection_name)
+            part_dir = self._part_dir(coll["id"])
 
-        def n_files() -> int:
-            return sum(f.endswith(".parquet") for f in storage.list_files(part_dir))
+            def n_files() -> int:
+                return sum(f.endswith(".parquet") for f in storage.list_files(part_dir))
 
-        n_before = n_files()
-        cur = self.documents(collection_name)
-        with self._dynamic_overwrite():
-            (
-                cur.repartition(target_files)
-                .withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
-            )
-        n_after = n_files()
-        st = self._load_stats(coll["id"])
-        if st is not None:  # row count unchanged; byte size rewritten
-            self._store_stats(coll["id"], st["document_count"])
-        return {"files_before": n_before, "files_after": n_after}
+            n_before = n_files()
+            self._overwrite_partition(
+                coll["id"],
+                self.collection_documents(coll["id"]).repartition(target_files))
+            n_after = n_files()
+            st = self._load_stats(coll["id"])
+            if st is not None:  # row count unchanged; byte size rewritten
+                self._store_stats(coll["id"], st["document_count"])
+            return {"files_before": n_before, "files_after": n_after}
 
     # -- helpers -----------------------------------------------------------
 
@@ -500,15 +490,13 @@ class Catalog:
             raise ValueError(f"Collection '{name}' not found")
         return coll
 
-    def _dynamic_overwrite(self):
-        spark = self.spark
-
-        class _Ctx:
-            def __enter__(self):
-                self.prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-            def __exit__(self, *exc):
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-
-        return _Ctx()
+    def _overwrite_partition(self, collection_id: int, df: DataFrame) -> None:
+        """Replace one collection's partition with ``df``. Dynamic mode
+        is a per-write option: every other partition is kept, and the
+        shared session's mode (a concurrent overwrite's) is untouched."""
+        (
+            df.withColumn("collection_id", F.lit(collection_id).cast("long"))
+            .select([f.name for f in DOCUMENT_SCHEMA.fields])
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("collection_id").parquet(self.documents_path)
+        )
